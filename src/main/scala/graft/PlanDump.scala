@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * report (plans/r06/): for each touched declared query, a `_before`
   * plan (the round-5 shape, reconstructed via the A/B confs that
   * preserve it) and an `_after` plan (current defaults). Maintenance
-  * rewrites (merge/zorder/delete) dump through the GRAFT_PLAN_DUMP
-  * hooks in Merge/Cluster/Delete instead — run MergeProbe/BenchExtra
-  * with that env var set.
+  * rewrites (merge/zorder/delete) are not covered here: register a
+  * QueryExecutionListener (`spark.sql.queryExecutionListeners`) and
+  * call `explainString(FormattedMode)` on the write's QueryExecution.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

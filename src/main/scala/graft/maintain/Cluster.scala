@@ -410,13 +410,6 @@ object Cluster {
     Result(snap, boundaries.length + 1, salts.size, carried.size, totalBytes)
   }
 
-  private def timing[A](name: String)(f: => A): A =
-    if (sys.env.contains("GRAFT_TIMING")) {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[cluster] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    } else f
-
   def run(table: TokenTable, curve: Curve, jobId: String,
       targetBytes: Long = 128L * 1024 * 1024,
       incremental: Boolean = true): Result = {
@@ -459,11 +452,9 @@ object Cluster {
     // values leave the executors (an aggregate of a ~5-value column —
     // the previous full-row collect shipped 200k rows to the driver and
     // then back inside a ~10MB task closure for re-keying).
-    val sampledSources = timing("sample") {
-      sampleScan.select($"source")
-        .sample(withReplacement = false, fraction, seed = 42L)
-        .distinct().as[String].collect()
-    }
+    val sampledSources = sampleScan.select($"source")
+      .sample(withReplacement = false, fraction, seed = 42L)
+      .distinct().as[String].collect()
     val dict = (sampledSources.toSet ++ inv.sourceBounds)
       .toSeq.sorted.zipWithIndex.toMap
     val maxNtok = inv.maxNtok
@@ -477,12 +468,10 @@ object Cluster {
     // reimplementation of xxhash64/interleave): only the 8-byte keys
     // are collected. Deterministic re-sample (same plan, fraction and
     // seed), so the keys correspond to the dictionary sample above.
-    val sampleKeys = timing("sample-keys") {
-      sampleScan.select($"doc_id", $"source", $"n_tok")
-        .sample(withReplacement = false, fraction, seed = 42L)
-        .select(curveKey(curve, dict, maxNtok).as("ckey"))
-        .as[Long].collect().sorted
-    }
+    val sampleKeys = sampleScan.select($"doc_id", $"source", $"n_tok")
+      .sample(withReplacement = false, fraction, seed = 42L)
+      .select(curveKey(curve, dict, maxNtok).as("ckey"))
+      .as[Long].collect().sorted
     val boundaries: Array[Long] =
       if (sampleKeys.isEmpty) Array.empty
       else (1 until buckets)
@@ -524,25 +513,17 @@ object Cluster {
       // evolved (added) columns survive the rewrite.
       .select(graft.table.Format.schemaOf(parent).fieldNames.toIndexedSeq.map(col): _*)
 
-    sys.env.get("GRAFT_PLAN_DUMP").foreach { d =>
-      val p = java.nio.file.Paths.get(d, s"ns_zorder_rewrite.txt")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, clustered.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    }
     // Version-scoped output dir: re-running a jobId after its commit must
     // never overwrite files the current snapshot references.
-    val out = timing("shuffle+sort+write+stats") {
-      table.writeDataFilesTo(clustered, s"data/$jobId-v${parent.version}",
-        overwrite = true, sortBy = None)
-    }
+    val out = table.writeDataFilesTo(clustered, s"data/$jobId-v${parent.version}",
+      overwrite = true, sortBy = None)
     // Bounded lineage-input marker — a full rewrite's input set is the
     // whole inventory, which planning deliberately never materializes.
     Lineage.completeTask(table, Lineage.TaskRecord(
       jobId, "cluster", Seq(s"<full-rewrite:${inv.files}-files>"), out,
       rows = out.map(_.rows).sum, tokenCount = out.map(_.sumNtok).sum,
       status = "done", durationMs = 0L))
-    val manifest = timing("manifest") { table.writeManifest(out) }
+    val manifest = table.writeManifest(out)
     // removedPaths empty: the rewrite-vs-append commit test keys on
     // keepManifests == parent.manifests (fails here), so a lost CAS
     // race still aborts for re-plan.

@@ -1,10 +1,8 @@
 package graft.maintain
 
-import graft.lineage.Lineage
 import graft.table.{DataFile, ManifestFileIndex, Snapshot, TokenTable}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.Filter
 
 /** Predicate DELETE (M9) — row-level delete as copy-on-write, the
   * lakehouse operation a training-data table needs for contamination /
@@ -45,94 +43,6 @@ object Delete {
       untouchedFiles: Long, deletedRows: Long, rewrittenBytes: Long,
       decodedBytes: Long = 0L, coldCopiedBytes: Long = 0L)
 
-  /** Result of row-group cold-copy planning over a copy-on-write DML
-    * rewrite's grazed files (shared by DELETE and UPDATE — MERGE has its
-    * own extent source). `fullyCold` files stay in the snapshot verbatim
-    * (the predicate provably touches none of their row groups despite
-    * the file-level stats saying "maybe" — possible when the file's
-    * [min,max] spans a gap between row groups); `coldFiles` are the
-    * bytewise column-chunk copies of cold runs inside mixed files;
-    * `decodeRels` is what the rewrite must actually decode.
-    */
-  private[maintain] case class ColdPlan(
-      splits: Seq[graft.table.RowGroupCopy.Split],
-      fullyCold: Seq[DataFile],
-      coldFiles: Seq[DataFile],
-      decodeRels: Seq[String],
-      decodedBytes: Long) {
-    def coldCopiedBytes: Long = coldFiles.map(_.bytes).sum
-    /** Hot extracts served only the rewrite; drop them eagerly (same
-      * policy as Merge — orphan GC would collect them, but leaving
-      * temporaries to GC hides bugs).
-      */
-    def dropHotExtracts(table: TokenTable, hotxDir: String): Unit =
-      if (splits.exists(s => !s.allCold && s.coldFiles.nonEmpty)) {
-        val hx = new org.apache.hadoop.fs.Path(s"${table.location}/$hotxDir")
-        hx.getFileSystem(table.spark.sessionState.newHadoopConf())
-          .delete(hx, true)
-      }
-  }
-
-  /** Plan the row-group-level cold copy for `rw` (the partially-matching
-    * files a DML rewrite would otherwise decode in full): row groups
-    * whose footer stats PROVE the predicate cannot hold for any of their
-    * rows ([[ManifestFileIndex.mightMatch]] applied per group — the SAME
-    * decision procedure the file-level classification and the scan
-    * planner use, over ALL stats columns: doc_id, source, n_tok) carry
-    * over as bytewise column-chunk copies; only possibly-matching groups
-    * decode. Cost then tracks the PREDICATE'S FOOTPRINT, not the grazed
-    * files' full size. A predicate that can never prune a group
-    * ([[ManifestFileIndex.canPrune]] false — no stats-column term, or
-    * every OR arm not prunable) skips the footer reads and decodes
-    * everything grazed (sound, never wrong).
-    */
-  private[maintain] def planCold(table: TokenTable, cond: Expression,
-      rw: Seq[DataFile], coldDir: String, hotxDir: String): ColdPlan = {
-    val splits: Seq[graft.table.RowGroupCopy.Split] =
-      if (rw.nonEmpty && ManifestFileIndex.canPrune(cond))
-        graft.table.RowGroupCopy.planAllByPredicate(table.spark,
-          table.location, rw.map(_.path), coldDir, hotxDir, cond)
-      else Nil
-    fromSplits(splits, rw)
-  }
-
-  /** Assemble a [[ColdPlan]] from per-file splits; empty splits = the
-    * unbounded degenerate plan (decode every grazed file).
-    */
-  private[maintain] def fromSplits(splits: Seq[graft.table.RowGroupCopy.Split],
-      rw: Seq[DataFile]): ColdPlan = {
-    val byPath = rw.map(f => f.path -> f).toMap
-    if (splits.nonEmpty)
-      ColdPlan(splits,
-        fullyCold = splits.filter(_.allCold).map(s => byPath(s.origPath)),
-        coldFiles = splits.flatMap(_.coldFiles),
-        decodeRels = splits.flatMap(_.decodeRel),
-        decodedBytes = splits.map(_.decodeBytes).sum)
-    else
-      ColdPlan(Nil, Nil, Nil, rw.map(_.path), rw.map(_.bytes).sum)
-  }
-
-  /** Resolve + normalize a DML predicate against the table schema once,
-    * on a scan plan, so classification sees bound AttributeReferences
-    * (names + types checked here — an unknown column fails loudly now,
-    * not mid-rewrite). ConstantFolding + NullPropagation +
-    * LikeSimplification normalize the shapes the classifier recognizes
-    * (LIKE 'p%' → StartsWith, literal arithmetic folded, null-literal
-    * comparisons → Literal(null) so `n_tok = CAST(NULL AS INT)` and
-    * `WHERE 1=0` short-circuit to the untouched class) without running
-    * the full optimizer, whose other rules could dissolve the Filter
-    * node itself. Shared by DELETE and UPDATE.
-    */
-  private[maintain] def resolveCondition(table: TokenTable,
-      parent: Snapshot, predicate: Column): Expression = {
-    import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, LikeSimplification, NullPropagation}
-    val analyzed = table.scan(parent).filter(predicate).queryExecution.analyzed
-    val simplified =
-      LikeSimplification(ConstantFolding(NullPropagation(ConstantFolding(analyzed))))
-    simplified.collectFirst { case f: Filter => f.condition }
-      .getOrElse(sys.error(s"unexpected analyzed DML plan: $simplified"))
-  }
-
   /** Delete every row satisfying `predicate` (over doc_id / tokens /
     * n_tok / source) from the table's current snapshot. Returns the
     * parent snapshot unchanged when nothing can match (a no-op delete
@@ -145,9 +55,8 @@ object Delete {
     * them, ADVICE r4).
     */
   def deleteWhere(table: TokenTable, predicate: Column, jobId: String): Result = {
-    val spark = table.spark
     val parent = table.current
-    val cond: Expression = resolveCondition(table, parent, predicate)
+    val cond: Expression = Rewrite.resolveCondition(table, parent, predicate)
 
     // One streamed classification pass; the driver retains only the
     // dropped + rewritten file lists (the predicate's touch set).
@@ -167,65 +76,42 @@ object Delete {
 
     // Row-group-level cold copy (same machinery as MERGE): decode only
     // the groups the predicate's doc_id cover can touch.
-    val coldDir = s"data/$jobId-v${parent.version}-cold"
-    val hotxDir = s"data/$jobId-v${parent.version}-hotx"
-    val plan = planCold(table, cond, rw, coldDir, hotxDir)
-    import plan.{fullyCold, coldFiles, decodeRels, decodedBytes}
+    val (coldDir, hotxDir) = Rewrite.dirs(jobId, parent)
+    val plan = Rewrite.planCold(table, cond, rw, coldDir, hotxDir)
 
     // Every grazed file fully cold and nothing drops: provably nothing
     // to delete — commit nothing (same contract as the no-op predicate).
-    if (drop.isEmpty && decodeRels.isEmpty)
+    if (drop.isEmpty && plan.decodeRels.isEmpty)
       return Result(parent, 0, 0, untouched + rw.size, 0L, 0L)
 
     // Copy-on-write rewrite of the decode set only: keep survivors,
     // preserve doc_id order within files.
-    val out: Seq[DataFile] =
-      if (decodeRels.isEmpty) Nil
-      else {
-        val paths = decodeRels.map(p => s"${table.location}/$p")
-        import org.apache.spark.sql.functions.{coalesce, lit}
-        val survivors = spark.read.schema(graft.table.Format.schemaOf(parent))
-          .parquet(paths: _*)
-          .filter(!coalesce(predicate, lit(false)))
-        sys.env.get("GRAFT_PLAN_DUMP").foreach { d =>
-          val p = java.nio.file.Paths.get(d, "ns_delete_rewrite.txt")
-          java.nio.file.Files.createDirectories(p.getParent)
-          java.nio.file.Files.writeString(p,
-            s"decode files: ${decodeRels.size} of ${untouched + drop.size + rw.size}" +
-              s" total; decoded bytes: $decodedBytes\n" +
-              survivors.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode))
-        }
-        table.writeDataFilesTo(survivors, s"data/$jobId-v${parent.version}",
-          overwrite = true, sortBy = Some("doc_id"))
-      }
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    commit(table, parent, jobId, drop, rw, untouched, plan) { t =>
+      (t.filter(!coalesce(predicate, lit(false))), Nil)
+    }
+  }
 
-    Lineage.completeTask(table, Lineage.TaskRecord(
-      jobId, "delete", (drop ++ rw).map(_.path), coldFiles ++ out,
-      rows = (coldFiles ++ out).map(_.rows).sum,
-      tokenCount = (coldFiles ++ out).map(_.sumNtok).sum,
-      status = "done", durationMs = 0L))
-
-    val removed = (drop ++ rw).map(_.path).toSet -- fullyCold.map(_.path)
-    val deletedRows = drop.map(_.rows).sum +
-      (rw.map(_.rows).sum - fullyCold.map(_.rows).sum) -
-      coldFiles.map(_.rows).sum - out.map(_.rows).sum
-    val manifest = table.writeSurvivorManifest(parent, removed, coldFiles ++ out)
-    val snap = table.commit(Some(parent), "delete",
-      addManifests = Seq(manifest), keepManifests = Nil,
-      removedPaths = removed,
-      summary = Map(
-        "deleted-rows" -> deletedRows.toString,
+  /** The shared tail of both DELETE paths: commit the rewrite through
+    * [[Rewrite.run]] and derive the deleted-row count from the stats
+    * delta (dropped rows + rewritten-input rows - added rows).
+    */
+  private def commit(table: TokenTable, parent: Snapshot, jobId: String,
+      drop: Seq[DataFile], rw: Seq[DataFile], untouched: Long,
+      plan: Rewrite.ColdPlan)(survivors: DataFrame => (DataFrame, Seq[String])): Result = {
+    def deleted(added: Seq[DataFile]): Long = (drop ++ rw).map(_.rows).sum -
+      plan.fullyCold.map(_.rows).sum - added.map(_.rows).sum
+    val done = Rewrite.run(table, parent, "delete", jobId, drop ++ rw, plan)(survivors) {
+      added => Map(
+        "deleted-rows" -> deleted(added).toString,
         "dropped-files" -> drop.size.toString,
         "rewritten-files" -> rw.size.toString,
         "untouched-files" -> untouched.toString,
-        "rewritten-bytes" -> rw.map(_.bytes).sum.toString,
-        "decoded-bytes" -> decodedBytes.toString,
-        "cold-copied-bytes" -> plan.coldCopiedBytes.toString))
-    plan.dropHotExtracts(table, hotxDir)
-    Result(snap, drop.size, rw.size, untouched, deletedRows,
+        "rewritten-bytes" -> rw.map(_.bytes).sum.toString)
+    }
+    Result(done.snapshot, drop.size, rw.size, untouched, deleted(done.added),
       rewrittenBytes = rw.map(_.bytes).sum,
-      decodedBytes = decodedBytes,
+      decodedBytes = plan.decodedBytes,
       coldCopiedBytes = plan.coldCopiedBytes)
   }
 
@@ -239,7 +125,6 @@ object Delete {
   def deleteByDocIds(table: TokenTable, docIds: DataFrame, jobId: String,
       inlineLimit: Int = 10000): Result = {
     import org.apache.spark.sql.functions._
-    val spark = table.spark
     val distinctIds = docIds.select(col("doc_id")).distinct()
     // limit+1 caps the driver materialization at the inline threshold.
     val sample = distinctIds.limit(inlineLimit + 1).collect().map(_.getString(0))
@@ -263,51 +148,17 @@ object Delete {
       val rw = prunePlan.touched
       val untouched = prunePlan.totalFiles - rw.size
       if (rw.isEmpty) return Result(parent, 0, 0, untouched, 0L, 0L)
-      val prune = prunePlan.prune
-      val coldDir = s"data/$jobId-v${parent.version}-cold"
-      val hotxDir = s"data/$jobId-v${parent.version}-hotx"
-      val splits: Seq[graft.table.RowGroupCopy.Split] =
-        if (prune.extLo.nonEmpty)
-          graft.table.RowGroupCopy.planAll(spark, table.location,
-            rw.map(_.path), coldDir, hotxDir, prune.extLo, prune.extHi)
-        else Nil
-      val plan = fromSplits(splits, rw)
+      val (coldDir, hotxDir) = Rewrite.dirs(jobId, parent)
+      val plan = Rewrite.planColdByExtents(table, rw,
+        prunePlan.prune.extLo, prunePlan.prune.extHi, coldDir, hotxDir)
       if (plan.decodeRels.isEmpty)
         return Result(parent, 0, 0, untouched + rw.size, 0L, 0L)
-      val paths = plan.decodeRels.map(p => s"${table.location}/$p")
       // No broadcast hint: beyond the inline threshold the list's size
       // is unbounded, so AQE picks broadcast vs shuffled anti join from
       // the measured build side.
-      val survivors = spark.read.schema(graft.table.Format.schemaOf(parent))
-          .parquet(paths: _*)
-        .join(distinctIds, Seq("doc_id"), "left_anti")
-      val out = table.writeDataFilesTo(survivors, s"data/$jobId-v${parent.version}",
-        overwrite = true, sortBy = Some("doc_id"))
-      Lineage.completeTask(table, Lineage.TaskRecord(
-        jobId, "delete", rw.map(_.path), plan.coldFiles ++ out,
-        rows = (plan.coldFiles ++ out).map(_.rows).sum,
-        tokenCount = (plan.coldFiles ++ out).map(_.sumNtok).sum,
-        status = "done", durationMs = 0L))
-      val removed = rw.map(_.path).toSet -- plan.fullyCold.map(_.path)
-      val deletedRows = rw.map(_.rows).sum - plan.fullyCold.map(_.rows).sum -
-        plan.coldFiles.map(_.rows).sum - out.map(_.rows).sum
-      val manifest = table.writeSurvivorManifest(parent, removed,
-        plan.coldFiles ++ out)
-      val snap = table.commit(Some(parent), "delete",
-        addManifests = Seq(manifest), keepManifests = Nil,
-        removedPaths = removed,
-        summary = Map(
-          "deleted-rows" -> deletedRows.toString,
-          "dropped-files" -> "0",
-          "rewritten-files" -> rw.size.toString,
-          "untouched-files" -> untouched.toString,
-          "rewritten-bytes" -> rw.map(_.bytes).sum.toString,
-          "decoded-bytes" -> plan.decodedBytes.toString,
-          "cold-copied-bytes" -> plan.coldCopiedBytes.toString))
-      plan.dropHotExtracts(table, hotxDir)
-      Result(snap, 0, rw.size, untouched, deletedRows, rw.map(_.bytes).sum,
-        decodedBytes = plan.decodedBytes,
-        coldCopiedBytes = plan.coldCopiedBytes)
+      commit(table, parent, jobId, Nil, rw, untouched, plan) { t =>
+        (t.join(distinctIds, Seq("doc_id"), "left_anti"), Nil)
+      }
     }
   }
 }

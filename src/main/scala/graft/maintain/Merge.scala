@@ -1,7 +1,6 @@
 package graft.maintain
 
 import graft.functions.{Search, SearchOps}
-import graft.lineage.Lineage
 import graft.table.{DataFile, Snapshot, TokenTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -313,13 +312,12 @@ object Merge {
     // collection hands over to distributed coarsening.
     val boundsCap = spark.conf.getOption("graft.merge.boundsCap")
       .map(_.toInt).getOrElse(DefaultBoundsCap)
-    val plan = planPrune(() => table.filesStream(parent),
+    val pruned = planPrune(() => table.filesStream(parent),
       srcKeys, () => table.files(parent), boundsCap,
       knownSrcCount = srcRows)
-    val prune = plan.prune
-    val touchedPaths = prune.touchedPaths
-    val touched = plan.touched
-    val untouchedCount = plan.totalFiles - touched.size
+    val prune = pruned.prune
+    val touched = pruned.touched
+    val untouchedCount = pruned.totalFiles - touched.size
 
     // Hot/cold split gate: classify rows/row-groups only when the
     // update is SPARSE relative to the touched data — if source keys
@@ -341,28 +339,11 @@ object Merge {
     // rewrite. Fully-cold files (file-level prune was over-approximate)
     // survive untouched with zero IO. Hot extracts are temporaries,
     // deleted after the commit.
-    val coldDir = s"data/$jobId-v${parent.version}-cold"
-    val hotxDir = s"data/$jobId-v${parent.version}-hotx"
-    val rgSplits: Seq[graft.table.RowGroupCopy.Split] =
-      if (split && touched.nonEmpty)
-        graft.table.RowGroupCopy.planAll(spark, table.location,
-          touched.map(_.path), coldDir, hotxDir, prune.extLo, prune.extHi)
-      else Nil
-    val byPathTouched = touched.map(f => f.path -> f).toMap
-    val fullyCold = rgSplits.filter(_.allCold).map(s => byPathTouched(s.origPath))
-    val coldFiles = rgSplits.flatMap(_.coldFiles)
-    val decodeRels: Seq[String] =
-      if (split) rgSplits.flatMap(_.decodeRel)
-      else touched.map(_.path)
-    val decodedBytes =
-      if (split) rgSplits.map(_.decodeBytes).sum
-      else touched.map(_.bytes).sum
-
-    val target =
-      if (decodeRels.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], physSchema)
-      else spark.read.schema(physSchema)
-        .parquet(decodeRels.map(p => s"${table.location}/$p"): _*)
+    val (coldDir, hotxDir) = Rewrite.dirs(jobId, parent)
+    val plan =
+      if (split) Rewrite.planColdByExtents(table, touched,
+        prune.extLo, prune.extHi, coldDir, hotxDir)
+      else Rewrite.fromSplits(Nil, touched)
 
     // --- the upsert ---
     // JOIN STRATEGY (optimization guide §3.1): the anti join only needs
@@ -383,7 +364,7 @@ object Merge {
     val tv = s"graft_merge_target_${jobId.replaceAll("[^A-Za-z0-9_]", "_")}"
     val sv = s"graft_merge_source_${jobId.replaceAll("[^A-Za-z0-9_]", "_")}"
     if (!useBroadcast) src.createOrReplaceTempView(sv)
-    val merged =
+    def upsert(target: DataFrame): DataFrame =
       if (useBroadcast) {
         // No hot/cold row classifier needed: with a broadcast build
         // side every row pays one hash probe — the classifier existed
@@ -463,7 +444,7 @@ object Merge {
     // following 2%-range delete from a ~1.1GB near-full rewrite into a
     // pruned few-file one. The exchange moves only the DECODED bytes
     // (cost tracks the update footprint, like the rest of the rewrite).
-    // Measured head-to-head at bench scale (MergeProbe, adjacent runs):
+    // Measured head-to-head at bench scale (adjacent runs):
     // exchange = merge 12.3-12.8s / next-delete 1.3s / 60 files;
     // map-only partitionBy(8 ranges) = 11.8-17.0s / 1.6-2.4s / 568 files;
     // no placement = 8.4s merge but 5.3-7.8s next-delete (full-range
@@ -471,119 +452,69 @@ object Merge {
     // 23.2-23.5s / 6.6s. Range exchange is the overall winner and
     // matches Iceberg's write.distribution-mode=range rationale
     // (guide §6): one shuffle buys prunable layout AND right-sized files.
-    val placement = spark.conf.getOption("graft.merge.placement")
-      .getOrElse("exchange")
-    def rangeBounds(nOut: Int): Array[String] = {
-      val fraction = math.min(1.0, 200000.0 / math.max(1L, touchedRows))
+    def placed(target: DataFrame): (DataFrame, Seq[String]) = {
+      val merged = upsert(target)
+      if (!useBroadcast) return (merged, if (split) Seq("__part") else Nil)
+      val maxPart = spark.sessionState.conf.filesMaxPartitionBytes
+      val nOut = math.max(1L, math.min(
+        (plan.decodedBytes + maxPart - 1) / math.max(1L, maxPart),
+        4L * spark.sessionState.conf.numShufflePartitions)).toInt
       val sampleKeys =
-        if (nOut <= 1 || decodeRels.isEmpty) Array.empty[String]
+        if (nOut <= 1 || plan.decodeRels.isEmpty) Array.empty[String]
         else target.select($"doc_id")
-          .sample(withReplacement = false, fraction, seed = 42L)
+          .sample(withReplacement = false,
+            math.min(1.0, 200000.0 / math.max(1L, touchedRows)), seed = 42L)
           .as[String].collect().sorted(Search.utf8Ordering)
-      if (sampleKeys.isEmpty) Array.empty
-      else (1 until nOut)
-        .map(i => sampleKeys(
-          (i.toLong * sampleKeys.length / nOut).toInt.min(sampleKeys.length - 1)))
-        .distinct.toArray
+      val rangeBounds =
+        if (sampleKeys.isEmpty) Array.empty[String]
+        else (1 until nOut)
+          .map(i => sampleKeys(
+            (i.toLong * sampleKeys.length / nOut).toInt.min(sampleKeys.length - 1)))
+          .distinct.toArray
+      val bounds = (rangeBounds ++ extentClusterBounds(prune, 32))
+        .distinct.sorted(Search.utf8Ordering)
+      if (bounds.isEmpty) (merged, Nil)
+      else (Cluster.exchangeByPid(merged,
+        SearchOps.bucketOfStr(col("doc_id"), bounds), bounds.length + 1), Nil)
     }
-    // Extent-aligned split points: the source-key extents, coarsened to
-    // at most `cap` clusters, each contributing [lo, succ(hi)) bounds —
-    // so HOT key ranges land in their own output files and every cold
-    // output's [min,max] provably excludes them. Without these, a small
-    // rewrite (one quantile range) emits one file spanning hot and cold
-    // rows alike, and the NEXT merge/delete over the same keys re-grazes
-    // all of it (the tight-cold-stats invariant the round-4/5 split
-    // partitioning established; PruningSpec pins it). succ(hi) =
-    // hi + ' ' (a strict upper bound just above the extent's last
-    // key: a shorter string precedes its extensions in binary order).
-    def extentClusterBounds(cap: Int): Array[String] = {
-      val n = prune.extLo.length
-      if (n == 0) Array.empty
-      else {
-        val step = math.max(1, (n + cap - 1) / cap)
-        val b = Array.newBuilder[String]
-        var i = 0
-        while (i < n) {
-          b += prune.extLo(i)
-          b += prune.extHi(math.min(n - 1, i + step - 1)) + " "
-          i += step
-        }
-        b.result()
-      }
+
+    val done = Rewrite.run(table, parent, "merge", jobId, touched, plan,
+        inserts = true)(placed) { _ => Map(
+      "source-rows" -> srcRows.toString,
+      "touched-files" -> touched.size.toString,
+      "untouched-files" -> untouchedCount.toString,
+      "touched-bytes" -> touched.map(_.bytes).sum.toString,
+      "fully-cold-files" -> plan.fullyCold.size.toString)
     }
-    val maxPart = spark.sessionState.conf.filesMaxPartitionBytes
-    val (rewriteDF, partCols) =
-      if (!useBroadcast) (merged, if (split) Seq("__part") else Nil)
-      else placement match {
-        case "none" => (merged, Nil)
-        case "exchange" =>
-          val nOut = math.max(1L, math.min(
-            (decodedBytes + maxPart - 1) / math.max(1L, maxPart),
-            4L * spark.sessionState.conf.numShufflePartitions)).toInt
-          val bounds = (rangeBounds(nOut) ++ extentClusterBounds(32))
-            .distinct.sorted(Search.utf8Ordering)
-          if (bounds.isEmpty) (merged, Nil)
-          else (Cluster.exchangeByPid(merged,
-            SearchOps.bucketOfStr(col("doc_id"), bounds), bounds.length + 1), Nil)
-        case _ => // "partition": map-only, dynamic range-partition files
-          val groups = spark.conf.getOption("graft.merge.rangeGroups")
-            .map(_.toInt).getOrElse(8)
-          val bounds = rangeBounds(groups)
-          if (bounds.isEmpty) (merged, Nil)
-          else (merged.withColumn("__part",
-            concat(lit("r"), SearchOps.bucketOfStr(col("doc_id"), bounds)
-              .cast("string"))), Seq("__part"))
-      }
-    // Plan-evidence hook (zero-cost unless GRAFT_PLAN_DUMP is set):
-    // writes the rewrite's formatted physical plan so optimization
-    // claims are checkable offline against plans/r06/.
-    sys.env.get("GRAFT_PLAN_DUMP").foreach { d =>
-      val tag = if (!useBroadcast) "smj" else s"broadcast_$placement"
-      val p = java.nio.file.Paths.get(d, s"ns_merge_rewrite_$tag.txt")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, rewriteDF.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    }
-    // Version-scoped output dir (same rationale as Compact/Cluster).
-    val out = table.writeDataFilesTo(rewriteDF, s"data/$jobId-v${parent.version}",
-      overwrite = true, sortBy = Some("doc_id"),
-      partitionBy = partCols)
-    Lineage.completeTask(table, Lineage.TaskRecord(
-      jobId, "merge", touched.map(_.path), out,
-      rows = out.map(_.rows).sum, tokenCount = out.map(_.sumNtok).sum,
-      status = "done", durationMs = 0L))
-    // Survivors = all - removed (untouched + fully-cold originals kept
-    // verbatim), plus bytewise cold copies and the rewrite's output —
-    // written without materializing the survivor list on the driver.
-    val removed = touchedPaths -- fullyCold.map(_.path)
-    val manifest = table.writeSurvivorManifest(parent, removed, coldFiles ++ out)
-    val snap = table.commit(Some(parent), "merge",
-      addManifests = Seq(manifest), keepManifests = Nil,
-      removedPaths = removed,
-      summary = Map(
-        "source-rows" -> srcRows.toString,
-        "touched-files" -> touched.size.toString,
-        "untouched-files" -> untouchedCount.toString,
-        "touched-bytes" -> touched.map(_.bytes).sum.toString,
-        "decoded-bytes" -> decodedBytes.toString,
-        "cold-copied-bytes" -> coldFiles.map(_.bytes).sum.toString,
-        "fully-cold-files" -> fullyCold.size.toString))
     src.unpersist()
     srcKeys.unpersist()
     if (!useBroadcast) {
       spark.catalog.dropTempView(tv)
       spark.catalog.dropTempView(sv)
     }
-    // Hot extracts served only the rewrite job: drop them now (orphan GC
-    // would also collect them, but leaving temporaries to GC hides bugs).
-    if (rgSplits.exists(s => !s.allCold && s.coldFiles.nonEmpty)) {
-      val hx = new org.apache.hadoop.fs.Path(s"${table.location}/$hotxDir")
-      hx.getFileSystem(spark.sessionState.newHadoopConf()).delete(hx, true)
-    }
-    Result(snap, touched.size, untouchedCount.toInt, srcRows,
+    Result(done.snapshot, touched.size, untouchedCount.toInt, srcRows,
       touchedBytes = touched.map(_.bytes).sum,
-      decodedBytes = decodedBytes,
-      coldCopiedBytes = coldFiles.map(_.bytes).sum,
-      fullyColdFiles = fullyCold.size)
+      decodedBytes = plan.decodedBytes,
+      coldCopiedBytes = plan.coldCopiedBytes,
+      fullyColdFiles = plan.fullyCold.size)
+  }
+
+  /** Extent-aligned split points: the source-key extents, coarsened to
+    * at most `cap` clusters, each contributing [lo, succ(hi)) bounds —
+    * so HOT key ranges land in their own output files and every cold
+    * output's [min,max] provably excludes them. Without these, a small
+    * rewrite (one quantile range) emits one file spanning hot and cold
+    * rows alike, and the NEXT merge/delete over the same keys re-grazes
+    * all of it (the tight-cold-stats invariant PruningSpec pins).
+    * succ(hi) = hi + U+0000, the immediate successor of hi in binary
+    * order: no key lies strictly between them, so every key above the
+    * extent's last key falls outside the hot range.
+    */
+  private def extentClusterBounds(prune: Prune, cap: Int): Array[String] = {
+    val n = prune.extLo.length
+    val step = math.max(1, (n + cap - 1) / cap)
+    (0 until n by step).flatMap { i =>
+      Seq(prune.extLo(i), prune.extHi(math.min(n - 1, i + step - 1)) + "\u0000")
+    }.toArray
   }
 }

@@ -1,6 +1,5 @@
 package graft.maintain
 
-import graft.lineage.Lineage
 import graft.table.{DataFile, ManifestFileIndex, Snapshot, TokenTable}
 import org.apache.spark.sql.{Column, functions => F}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -53,7 +52,6 @@ object Update {
     */
   def updateWhere(table: TokenTable, assignments: Seq[(String, Column)],
       predicate: Column, jobId: String): Result = {
-    val spark = table.spark
     val parent = table.current
     // Schema pinned to the parent snapshot — one read; a concurrent
     // ALTER mid-job can never make planning, the rewrite projection and
@@ -104,7 +102,7 @@ object Update {
 
     // Resolve + normalize the predicate exactly as Delete does, so the
     // planner sees the shapes the file classifier recognizes.
-    val cond: Expression = Delete.resolveCondition(table, parent, predicate)
+    val cond: Expression = Rewrite.resolveCondition(table, parent, predicate)
 
     var untouched = 0L
     val rewrite = Seq.newBuilder[DataFile]
@@ -119,56 +117,38 @@ object Update {
     // their bytes carry over verbatim and only the hot slice decodes
     // through the CASE projection. Cost tracks the UPDATED FOOTPRINT,
     // not grazed files.
-    val coldDir = s"data/$jobId-v${parent.version}-cold"
-    val hotxDir = s"data/$jobId-v${parent.version}-hotx"
-    val plan = Delete.planCold(table, cond, rw, coldDir, hotxDir)
+    val (coldDir, hotxDir) = Rewrite.dirs(jobId, parent)
+    val plan = Rewrite.planCold(table, cond, rw, coldDir, hotxDir)
     // Every grazed file fully cold: nothing can match — commit nothing.
     if (plan.decodeRels.isEmpty)
       return Result(parent, 0, untouched + rw.size, 0L, 0L)
 
-    val paths = plan.decodeRels.map(p => s"${table.location}/$p")
-    val touched = spark.read.schema(physSchema).parquet(paths: _*)
-    // Matched-row count over the touched files only (they are about to
-    // be re-read for the rewrite; at most the touch set is scanned
-    // twice, never the table).
-    val updatedRows = touched.filter(predicate).count()
-    // ONE simultaneous projection — SQL UPDATE semantics: every
-    // assignment RHS and the predicate see the ORIGINAL row (a
-    // sequential withColumn chain would let `SET source = 'x'` flip a
-    // `WHERE source = 'y'` predicate to false before the next
-    // assignment evaluates). The derived n_tok re-evaluates the tokens
-    // RHS — also over the ORIGINAL row, so the pair stays consistent.
+    var updatedRows = 0L
     val byName = effective.toMap
-    val rewritten = touched.select(physSchema.fieldNames.toIndexedSeq.map { n =>
-      byName.get(n) match {
-        case Some(v) => F.when(predicate, v).otherwise(F.col(n)).as(n)
-        case None => F.col(n)
-      }
-    }: _*)
-    val out = table.writeDataFilesTo(rewritten, s"data/$jobId-v${parent.version}",
-      overwrite = true, sortBy = Some("doc_id"))
-
-    Lineage.completeTask(table, Lineage.TaskRecord(
-      jobId, "update", rw.map(_.path), plan.coldFiles ++ out,
-      rows = (plan.coldFiles ++ out).map(_.rows).sum,
-      tokenCount = (plan.coldFiles ++ out).map(_.sumNtok).sum,
-      status = "done", durationMs = 0L))
-
-    val removed = rw.map(_.path).toSet -- plan.fullyCold.map(_.path)
-    val manifest = table.writeSurvivorManifest(parent, removed,
-      plan.coldFiles ++ out)
-    val snap = table.commit(Some(parent), "update",
-      addManifests = Seq(manifest), keepManifests = Nil,
-      removedPaths = removed,
-      summary = Map(
-        "updated-rows" -> updatedRows.toString,
-        "rewritten-files" -> rw.size.toString,
-        "untouched-files" -> untouched.toString,
-        "rewritten-bytes" -> rw.map(_.bytes).sum.toString,
-        "decoded-bytes" -> plan.decodedBytes.toString,
-        "cold-copied-bytes" -> plan.coldCopiedBytes.toString))
-    plan.dropHotExtracts(table, hotxDir)
-    Result(snap, rw.size, untouched, updatedRows, rw.map(_.bytes).sum,
+    val done = Rewrite.run(table, parent, "update", jobId, rw, plan) { touched =>
+      // Matched-row count over the touched files only (they are about
+      // to be re-read for the rewrite; at most the touch set is scanned
+      // twice, never the table).
+      updatedRows = touched.filter(predicate).count()
+      // ONE simultaneous projection — SQL UPDATE semantics: every
+      // assignment RHS and the predicate see the ORIGINAL row (a
+      // sequential withColumn chain would let `SET source = 'x'` flip a
+      // `WHERE source = 'y'` predicate to false before the next
+      // assignment evaluates). The derived n_tok re-evaluates the tokens
+      // RHS — also over the ORIGINAL row, so the pair stays consistent.
+      (touched.select(physSchema.fieldNames.toIndexedSeq.map { n =>
+        byName.get(n) match {
+          case Some(v) => F.when(predicate, v).otherwise(F.col(n)).as(n)
+          case None => F.col(n)
+        }
+      }: _*), Nil)
+    } { _ => Map(
+      "updated-rows" -> updatedRows.toString,
+      "rewritten-files" -> rw.size.toString,
+      "untouched-files" -> untouched.toString,
+      "rewritten-bytes" -> rw.map(_.bytes).sum.toString)
+    }
+    Result(done.snapshot, rw.size, untouched, updatedRows, rw.map(_.bytes).sum,
       decodedBytes = plan.decodedBytes,
       coldCopiedBytes = plan.coldCopiedBytes)
   }

@@ -179,10 +179,30 @@ case class TokenTableResolution(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
+  /** Catalyst's own lowering of RuntimeReplaceable wrappers (what the
+    * optimizer's ReplaceExpressions does, plus inlining the `With` a
+    * wrapper may build). An analyzed `x BETWEEN a AND b` holds a `With`
+    * whose references cache their definition's data type, so replacing
+    * its resolved attribute by an unresolved name — the by-name
+    * re-anchoring below — cannot rebuild it. The lowered form
+    * `x >= a AND x <= b` means the same and re-anchors cleanly. A `With`
+    * over a nondeterministic definition stays (inlining would evaluate
+    * it twice).
+    */
+  private def lowered(e: org.apache.spark.sql.catalyst.expressions.Expression) = {
+    import org.apache.spark.sql.catalyst.expressions.{CommonExpressionRef, RuntimeReplaceable, With}
+    e.transformUp {
+      case w: With if w.defs.forall(_.child.deterministic) =>
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        w.child.transform { case r: CommonExpressionRef => defs(r.id) }
+      case r: RuntimeReplaceable => r.replacement
+    }
+  }
+
   private def convertDelete(condition: org.apache.spark.sql.catalyst.expressions.Expression,
       path: String): LogicalPlan = {
     val toPhys = translator(path)
-    val byName = condition.transform {
+    val byName = lowered(condition).transform {
       case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
         UnresolvedAttribute(Seq(toPhys(a.name)))
       case a: UnresolvedAttribute =>
@@ -215,7 +235,7 @@ case class TokenTableResolution(spark: SparkSession) extends Rule[LogicalPlan] {
       case other => throw new UnsupportedOperationException(
         s"UPDATE graft.`$path`: unsupported assignment target $other (plain columns only)")
     }
-    def byName(e: org.apache.spark.sql.catalyst.expressions.Expression) = e.transform {
+    def byName(e: org.apache.spark.sql.catalyst.expressions.Expression) = lowered(e).transform {
       case a: AttributeReference => UnresolvedAttribute(Seq(toPhys(a.name)))
       case a: UnresolvedAttribute =>
         UnresolvedAttribute(Seq(toPhys(a.nameParts.last)))

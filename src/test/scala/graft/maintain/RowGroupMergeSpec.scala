@@ -2,6 +2,7 @@ package graft.maintain
 
 import graft.SparkSpec
 import graft.ingest.TokenGen
+import graft.lineage.Lineage
 import graft.table.{RowGroupCopy, TokenTable}
 import org.apache.spark.sql.functions._
 
@@ -61,6 +62,20 @@ class RowGroupMergeSpec extends SparkSpec {
         .filter($"doc_id" >= f"doc_${3000}%012d" && $"doc_id" <= f"doc_${3049}%012d")
       assert(in.count() == 50 && in.filter($"n_tok" === 4).count() == 50)
       assert(checksum(t.scan()) != before, "update must be visible")
+
+      // Lineage records every file the commit added — the cold copies
+      // as well as the rewrite output — with their rows.
+      val parentPaths = t.filesLocal(t.snapshotAt(r.snapshot.parentVersion))
+        .map(_.path).toSet
+      val added = t.filesLocal(r.snapshot).filterNot(f => parentPaths(f.path))
+      val m = Lineage.metrics(spark, t, "rg-m1").head()
+      assert(m.getAs[Long]("rows") == added.map(_.rows).sum,
+        s"lineage rows ${m.getAs[Long]("rows")} vs added ${added.map(_.rows).sum}")
+      assert(m.getAs[Int]("output_files") == added.size)
+      val coldCopies = added.map(_.path).filter(_.contains(s"rg-m1-v${r.snapshot.parentVersion}-cold"))
+      assert(coldCopies.nonEmpty, s"expected cold copies among ${added.map(_.path)}")
+      val recorded = Lineage.taskRecords(t, "rg-m1").flatMap(_.outputFiles.map(_.path)).toSet
+      assert(coldCopies.forall(recorded), "lineage output_files must include the cold copies")
 
       // Hot extracts are temporaries: gone after the merge commit.
       assert(!java.nio.file.Files.exists(
@@ -189,4 +204,96 @@ class RowGroupMergeSpec extends SparkSpec {
       }
     }
   }
+
+  test("sort-merge and broadcast merge paths agree on a sparse two-cluster update") {
+    // Two identical Z-ordered tables: curve order spreads every file over
+    // the whole doc_id range, so a 48-key update touches all files and
+    // takes the hot/cold split. One table merges through the sort-merge
+    // path (composite hot/cold key, per-gap `c<idx>` cold partitions),
+    // the other through the default broadcast path.
+    def build(name: String): TokenTable = {
+      val t = TokenTable.create(spark, tmpDir(name))
+      (0 until 4).foreach { i =>
+        t.append(TokenGen.asTokenRows(TokenGen.generate(
+          spark, 2000, idOffset = i * 2000L, minLen = 16, maxLen = 32,
+          numPartitions = 2)))
+      }
+      Cluster.run(t, Cluster.ZOrder, s"$name-z", targetBytes = 256L * 1024)
+      t
+    }
+    def id(i: Int) = f"doc_$i%012d"
+    def updates(t: TokenTable, ranges: Seq[(Int, Int)], tok: Int) = t.scan()
+      .filter(ranges.map { case (a, b) => $"doc_id" >= id(a) && $"doc_id" <= id(b) }
+        .reduce(_ || _))
+      .select($"doc_id", array_repeat(lit(tok), 3).as("tokens"),
+        lit(3).as("n_tok"), $"source")
+      .withColumn("__p", monotonically_increasing_id())
+    def tokensById(t: TokenTable): Map[String, Seq[Int]] =
+      t.scan().select($"doc_id", $"tokens").collect()
+        .map(r => r.getString(0) -> r.getAs[scala.collection.Seq[Int]](1).toSeq).toMap
+    def sortMerge[A](f: => A): A = {
+      spark.conf.set("graft.merge.broadcastKeyRows", "0")
+      try f finally spark.conf.unset("graft.merge.broadcastKeyRows")
+    }
+    val smj = build("merge_smj")
+    val bc = build("merge_bc")
+    val clusters = Seq((1000, 1023), (6000, 6023))
+    val rs = sortMerge(Merge.mergeInto(smj, updates(smj, clusters, 7), "__p", "smj-m1"))
+    val rb = Merge.mergeInto(bc, updates(bc, clusters, 7), "__p", "bc-m1")
+    assert(rs.sourceRows == 48 && rb.sourceRows == 48)
+    assert(checksum(smj.scan()) == checksum(bc.scan()), "both paths must produce the same table")
+    assert(tokensById(smj) == tokensById(bc), "token arrays must be byte-equal per doc_id")
+    assert(smj.scan().filter($"n_tok" === 3).count() == 48)
+
+    // Every output file holding no source key (a cold output) must lie
+    // outside every source-key extent, so the next merge over the same
+    // keys prunes it.
+    val keys = clusters.flatMap { case (a, b) => (a to b).map(id) }.toSet
+    Seq(smj -> rs, bc -> rb).foreach { case (t, r) =>
+      val parentPaths = t.filesLocal(t.snapshotAt(r.snapshot.parentVersion))
+        .map(_.path).toSet
+      val added = t.filesLocal(r.snapshot).filterNot(f => parentPaths(f.path))
+      val cold = added.filterNot { f =>
+        spark.read.parquet(s"${t.location}/${f.path}").select($"doc_id")
+          .as[String].collect().exists(keys)
+      }
+      assert(cold.nonEmpty, s"expected cold outputs among ${added.map(_.path)}")
+      cold.foreach { f =>
+        assert(clusters.forall { case (a, b) => f.maxDocId < id(a) || f.minDocId > id(b) },
+          s"cold output ${f.path} [${f.minDocId}, ${f.maxDocId}] straddles a source extent")
+      }
+      if (t eq smj) assert(added.exists(_.path.contains("__part=c")),
+        "the sort-merge path must write per-gap cold partitions")
+    }
+
+    // More extents than MaxGapPartitions: the sort-merge path falls back
+    // to one cold partition; both paths still agree.
+    val wide = Seq((2000, 2039), (7000, 7039))
+    sortMerge(Merge.mergeInto(smj, updates(smj, wide, 8), "__p", "smj-m2"))
+    Merge.mergeInto(bc, updates(bc, wide, 8), "__p", "bc-m2")
+    assert(tokensById(smj) == tokensById(bc))
+    assert(smj.scan().filter($"n_tok" === 3).count() == 128)
+  }
+
+  test("a key just above a source extent stays out of the hot output file") {
+    // `k + "\t"` sorts after `k` but before `k + " "`: the extent bound
+    // succ(k) must be the immediate successor, or the cold row is placed
+    // in the hot range's output file and the next merge on `k` re-grazes it.
+    val t = TokenTable.create(spark, tmpDir("merge_succ"))
+    val k = "doc_k"
+    t.append(Seq((k, Seq(1, 2), 2, "web"), (k + "\t", Seq(3), 1, "web"))
+      .toDF("doc_id", "tokens", "n_tok", "source").coalesce(1))
+    assert(t.filesLocal(t.current).size == 1)
+    val src = Seq((k, Seq(9), 1, "web", 0L))
+      .toDF("doc_id", "tokens", "n_tok", "source", "__p")
+    Merge.mergeInto(t, src, "__p", "succ-m1")
+    assert(tokensOf(t, k) == Seq(9) && tokensOf(t, k + "\t") == Seq(3))
+    val holding = t.filesLocal(t.current).filter(f => f.minDocId <= k && f.maxDocId >= k)
+    assert(holding.nonEmpty && holding.forall(_.maxDocId == k),
+      s"file holding $k must end at $k: ${holding.map(f => (f.minDocId, f.maxDocId))}")
+  }
+
+  private def tokensOf(t: TokenTable, docId: String): Seq[Int] =
+    t.scan().filter($"doc_id" === docId).select($"tokens").head()
+      .getAs[scala.collection.Seq[Int]](0).toSeq
 }

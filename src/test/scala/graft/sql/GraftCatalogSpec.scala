@@ -21,6 +21,26 @@ class GraftCatalogSpec extends SparkSpec {
   private val ddlCols =
     "(doc_id STRING NOT NULL, tokens ARRAY<INT> NOT NULL, n_tok INT NOT NULL, source STRING NOT NULL)"
 
+  /** A fresh session with the graft catalog AND extensions registered
+    * (plain `spark.sql`, no manual rule application); the shared session
+    * is restored afterwards.
+    */
+  private def withCatalogSession(f: SparkSession => Unit): Unit = {
+    val base = spark // force shared-session init before we detach
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
+      .withExtensions(new graft.GraftExtensions())
+      .getOrCreate()
+    try f(s2) finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
   test("aggregate pushdown: count/min/max/sum answered from manifest stats") {
     withCatalog {
       val loc = tmpDir("cat_agg")
@@ -183,16 +203,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("catalog + extensions session: plain spark.sql MERGE INTO, no manual rule") {
-    val base = spark // force shared-session init before we detach
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
-      .withExtensions(new graft.GraftExtensions())
-      .getOrCreate()
-    try {
+    withCatalogSession { s2 =>
       val loc = tmpDir("cat_merge")
       s2.sql(s"CREATE TABLE graft.`$loc` $ddlCols")
       TokenGen.asTokenRows(TokenGen.generate(s2, 100, numPartitions = 2))
@@ -235,9 +246,32 @@ class GraftCatalogSpec extends SparkSpec {
         s"UPDATE graft.`$loc` SET source = 'u' WHERE n_tok = 3").collect()(0)
       assert(upd.getLong(1) == 10L, s"UPDATE must report the 10 merged rows, got $upd")
       assert(t.scan().filter($"source" === "u").count() == 10)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("catalog + extensions session: DELETE and UPDATE accept BETWEEN") {
+    // The analyzer binds `doc_id BETWEEN a AND b` to the DSv2 relation
+    // before the resolution rule runs; re-anchoring that bound condition
+    // onto the engine's scan must keep it resolvable.
+    withCatalogSession { s2 =>
+      val loc = tmpDir("cat_between")
+      s2.sql(s"CREATE TABLE graft.`$loc` $ddlCols")
+      TokenGen.asTokenRows(TokenGen.generate(s2, 100, numPartitions = 2))
+        .createOrReplaceTempView("cb_base")
+      s2.sql(s"INSERT INTO graft.`$loc` SELECT * FROM cb_base")
+      val upd = s2.sql(
+        s"""UPDATE graft.`$loc` SET source = 'x'
+           |WHERE doc_id BETWEEN 'doc_000000000010' AND 'doc_000000000019'""".stripMargin)
+        .collect()(0)
+      assert(upd.getLong(1) == 10L, s"UPDATE must report 10 rows, got $upd")
+      val del = s2.sql(
+        s"DELETE FROM graft.`$loc` WHERE doc_id BETWEEN 'doc_000000000000' AND 'doc_000000000004'")
+        .collect()(0)
+      assert(del.getLong(1) == 5L, s"DELETE must report 5 rows, got $del")
+      val t = TokenTable.open(s2, loc)
+      assert(t.scan().count() == 95)
+      assert(t.scan().filter($"source" === "x").count() == 10)
+      assert(t.scan().filter($"doc_id" <= "doc_000000000004").count() == 0)
     }
   }
 }
